@@ -12,7 +12,7 @@ import os
 import re
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 STOPWORDS = ("the", "a", "of", "to", "in", "and", "is", "on")
@@ -515,6 +515,10 @@ def highlight_snippets(
 _BM_SCHEME = 3  # tokenizer/layout version; 2 = positional postings,
 # 3 = CDC-maintainable (postings carry gen; docstats carry
 # gen/deleted/sig; _bm_params records stored fields + mutated flag)
+
+# target postings/docstats file size: compaction's output files, and
+# the width of a CDC fold's postings append
+_BM_FILE_BYTES = 128 << 20
 
 
 def _bm_postings_path(store_path: str) -> str:
@@ -1085,56 +1089,50 @@ def apply_cdc_to_bm25_index(
         F.col(text_col).alias("__t"),
         *[F.col(c) for c in fields],
         *([F.col(seq_col).alias("__seq")] if seq_col else []),
-    )
-    if seq_col:
-        wseq = Window.partitionBy("doc").orderBy(F.col("__seq").desc())
-        b = (
-            b.withColumn("__rn", F.row_number().over(wseq))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__seq")
-        )
-    else:
-        # duplicate-id detection rides the digest-probe job below as a
-        # batch-keyed window count instead of a separate agg pass
-        b = b.withColumn(
-            "__dup", F.count("*").over(Window.partitionBy("doc"))
-        )
-    b = b.withColumn(
+    ).withColumn(
         "__sig",
         F.when(
             F.col("__op") != "d", F.xxhash64(F.col("__t"))
         ),  # tombstones carry a NULL digest
     )
+    # ONE window exchange keyed by doc serves the whole probe: the
+    # batch rows plus their docs' stored docstats rows (a broadcast
+    # semi-join keeps the store side batch-sized).  Each batch row gets
+    # its doc's latest stored state (``__cur``, max_by gen; the stored
+    # fields ride along so the replay check sees a fields-only change —
+    # the ES update_by_query noop comparison covers the whole doc), and
+    # either the last-writer-wins pick (seq_col) or the duplicate count
+    whole = Window.partitionBy("doc")
     if docstats is not None:
-        w = Window.partitionBy("doc").orderBy(F.col("gen").desc())
-        latest = (
+        b = b.unionByName(
             docstats.join(
                 F.broadcast(b.select("doc")), "doc", "left_semi"
-            )
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select(
+            ).select(
                 "doc",
-                F.col("sig").alias("__cur_sig"),
-                F.col("deleted").alias("__cur_del"),
-                # stored-field values ride the probe so the replay
-                # check can see a fields-only change (the ES
-                # update_by_query noop comparison covers the whole
-                # doc, not just the text)
-                *[F.col(f).alias(f"__cur_fld_{f}") for f in fields],
-            )
-        )
-        b = b.join(F.broadcast(latest), "doc", "left")
+                F.col("gen").alias("__gen"),
+                F.struct("sig", "deleted", *fields).alias("__st"),
+            ),
+            allowMissingColumns=True,
+        ).withColumn("__cur", F.max_by("__st", "__gen").over(whole))
+        mine = F.col("__st").isNull()
     else:
-        b = b.withColumn("__cur_sig", F.lit(None).cast("long")).withColumn(
-            "__cur_del", F.lit(None).cast("boolean")
+        # nothing stored yet: a NULL state of the same struct shape
+        b = b.withColumn("__cur", F.when(F.lit(False), F.struct(
+            F.col("__sig").alias("sig"), F.lit(True).alias("deleted"),
+            *fields,
+        )))
+        mine = F.lit(True)
+    if seq_col:
+        # batch rows sort ahead of stored ones, latest seq first
+        last = Window.partitionBy("doc").orderBy(
+            mine.desc(), F.col("__seq").desc()
         )
-        for f in fields:
-            b = b.withColumn(f"__cur_fld_{f}", F.col(f))
-    # ONE batch-proportional job materializes the probe: batch rows +
-    # their latest stored state (+ the dup count when unordered); every
-    # check below reads the checkpointed blocks, not the store
-    probe = b.localCheckpoint(eager=True)
+        b = b.withColumn("__rn", F.row_number().over(last))
+        keep = mine & (F.col("__rn") == 1)
+    else:
+        b = b.withColumn("__dup", F.sum(mine.cast("long")).over(whole))
+        keep = mine
+    b = b.filter(keep).drop("__seq", "__gen", "__st", "__rn")
     # replay filter: an upsert applies unless the LIVE row carries the
     # same digest; a delete applies only to a live row; a TOMBSTONING
     # upsert (null text — the only input that tokenizes to nothing,
@@ -1144,81 +1142,72 @@ def apply_cdc_to_bm25_index(
     # delivery forever (caught by the dead-counter exactness test;
     # note xxhash64(NULL) is a constant, NOT null, so the digest
     # comparison alone cannot recognize this case)
+    cur_live = F.col("__cur.deleted").eqNullSafe(F.lit(False))
     same_fields = F.lit(True)
     for f in fields:
-        same_fields = same_fields & F.col(f"__cur_fld_{f}").eqNullSafe(
+        same_fields = same_fields & F.col(f"__cur.`{f}`").eqNullSafe(
             F.col(f)
         )
-    applies = F.when(
-        F.col("__op") == "d", F.col("__cur_del").eqNullSafe(F.lit(False))
-    ).otherwise(
+    applies = F.when(F.col("__op") == "d", cur_live).otherwise(
         ~(
             (
-                F.col("__cur_del").eqNullSafe(F.lit(False))
-                & F.col("__cur_sig").eqNullSafe(F.col("__sig"))
+                cur_live
+                & F.col("__cur.sig").eqNullSafe(F.col("__sig"))
                 & same_fields
             )
             | (
-                F.col("__cur_del").eqNullSafe(F.lit(True))
+                F.col("__cur.deleted").eqNullSafe(F.lit(True))
                 & F.col("__t").isNull()
             )
         )
     )
-    applied_full = probe.filter(applies)
-    # ONE batch-sized aggregate serves the emptiness check, the
-    # dead-row increment for the params counter AND (when unordered)
-    # the duplicate-id guard — previously a second collect job per
-    # trigger: each applied row kills its doc's previous latest LIVE
-    # row (a superseded tombstone was already counted dead when IT was
-    # written — counting it again on resurrection would drift the
-    # counter +1 per delete→reinsert cycle), and a tombstone row is
-    # itself dead.  A non-delete row tombstones iff its text is NULL —
-    # the tokenizer maps every non-null string (even whitespace) to ≥1
-    # token, and only a token-less doc gets a tombstone below; keying
-    # on NULL directly also sidesteps size(NULL)'s config-dependent
-    # -1/NULL semantics.  The dup guard aggregates over the FULL probe
-    # (conditional sums), not the applied subset — a duplicated id
-    # must raise even when every copy is a replay.
+    # the probe's one checkpoint job also yields, as observed metrics,
+    # the emptiness check, the dead-row increment for the params
+    # counter, the postings size estimate AND (when unordered) the
+    # duplicate-id guard.  Each applied row kills its doc's previous
+    # latest LIVE row (a superseded tombstone was already counted dead
+    # when IT was written — counting it again on resurrection would
+    # drift the counter +1 per delete→reinsert cycle), and a tombstone
+    # row is itself dead.  A non-delete row tombstones iff its text is
+    # NULL (analysis.py: non-null text yields ≥1 token), which also
+    # sidesteps size(NULL)'s config-dependent -1/NULL.  The dup guard
+    # reads the FULL probe, not the applied subset — a duplicated id
+    # must raise even when every copy is a replay.  A fresh
+    # Observation at the top of the checkpointed plan reports exactly
+    # that one materialization.
     is_tomb = (F.col("__op") == "d") | F.col("__t").isNull()
-    arow = probe.agg(
+    counts = Observation()
+    probe = b.observe(
+        counts,
         F.sum(applies.cast("long")).alias("n"),
-        F.sum(
-            (applies & F.col("__cur_del").eqNullSafe(F.lit(False)))
-            .cast("long")
-        ).alias("prior"),
+        F.sum((applies & cur_live).cast("long")).alias("prior"),
         F.sum((applies & is_tomb).cast("long")).alias("tombs"),
-        *(
-            []
-            if seq_col
-            else [F.max(F.col("__dup")).alias("maxdup")]
-        ),
-    ).head()
-    if not seq_col:
-        if arow["maxdup"] is not None and int(arow["maxdup"]) > 1:
-            # error path only: one extra scan of the materialized
-            # blocks to name the offending ids
-            dups = [
-                r["doc"]
-                for r in probe.filter(F.col("__dup") > 1)
-                .select("doc")
-                .distinct()
-                .limit(5)
-                .collect()
-            ]
-            raise ValueError(
-                f"apply_cdc_to_bm25_index: duplicate doc ids {dups} in "
-                "the batch and no seq_col to order them — pre-compact "
-                "(mergeOplogs) or pass seq_col for last-writer-wins"
-            )
-        probe = probe.drop("__dup")
-        applied_full = probe.filter(applies)
-    if int(arow["n"] or 0) == 0:
+        F.sum(
+            F.when(applies & ~is_tomb, F.octet_length("__t"))
+        ).alias("text_bytes"),
+        *([] if seq_col else [F.max("__dup").alias("maxdup")]),
+    ).localCheckpoint(eager=True)
+    arow = counts.get
+    if not seq_col and (arow["maxdup"] or 0) > 1:
+        # error path only: one extra scan of the materialized blocks
+        # to name the offending ids
+        dups = [
+            r["doc"]
+            for r in probe.filter(F.col("__dup") > 1)
+            .select("doc")
+            .distinct()
+            .limit(5)
+            .collect()
+        ]
+        raise ValueError(
+            f"apply_cdc_to_bm25_index: duplicate doc ids {dups} in "
+            "the batch and no seq_col to order them — pre-compact "
+            "(mergeOplogs) or pass seq_col for last-writer-wins"
+        )
+    if not arow["n"]:
         return spark.createDataFrame([], "doc long, op string, gen long")
     dead_inc = int(arow["prior"] or 0) + int(arow["tombs"] or 0)
-    applied = applied_full.drop(
-        "__cur_sig", "__cur_del",
-        *[f"__cur_fld_{f}" for f in fields],
-    )
+    applied = probe.filter(applies).drop("__dup", "__cur")
     # generation counter lives in params (one row), mirroring the IVF
     # store — never recomputed from corpus-sized docstats metadata.
     # Legacy params rows predating the counter fall back to one
@@ -1269,19 +1258,23 @@ def apply_cdc_to_bm25_index(
         )
 
     ups = applied.filter(F.col("__op") != "d")
-    toks = ups.select(
-        "doc",
-        F.posexplode(an.tokens_col(F.col("__t"))).alias("p", "token"),
-    )
-    # ONE tokenize pass (see incremental_bm25_index): the checkpoint
-    # feeds the postings write (incl. repartitionByRange's sampling
-    # pass) and the dl aggregation from materialized rows
-    tf_rows = toks.groupBy("doc", "token").agg(
-        F.count("*").alias("tf"),
-        F.sort_array(F.collect_list("p")).alias("pos"),
-    ).localCheckpoint(eager=True)
-    dl_rows = tf_rows.groupBy("doc").agg(
-        F.sum("tf").cast("long").alias("dl")
+    tokens = an.tokens_col(F.col("__t"))
+    # the token rows range-partition BEFORE the (doc, token) grouping:
+    # a (token, doc) range partitioning already clusters every group,
+    # so the aggregate adds no second exchange, and the append is one
+    # shuffle over the probe checkpoint.  Its width comes from the
+    # probe's observed text bytes against the compaction byte target,
+    # not from a RangePartitioner sampling job — a batch below the
+    # target (every trigger-sized one) writes ONE token-sorted file
+    n_files = max(1, -(-int(arow["text_bytes"] or 0) // _BM_FILE_BYTES))
+    tf_rows = (
+        ups.select("doc", F.posexplode(tokens).alias("p", "token"))
+        .repartitionByRange(n_files, "token", "doc")
+        .groupBy("doc", "token")
+        .agg(
+            F.count("*").alias("tf"),
+            F.sort_array(F.collect_list("p")).alias("pos"),
+        )
     )
     if postings is not None and not fresh_g:
         # retry convergence on the LEGACY generation paths only: rows
@@ -1298,24 +1291,24 @@ def apply_cdc_to_bm25_index(
         tf_rows = tf_rows.join(F.broadcast(already), "doc", "left_anti")
     tf_rows.select(
         "token", "doc", "tf", "pos", F.lit(g).cast("long").alias("gen")
-    ).repartitionByRange("token", "doc").sortWithinPartitions(
-        "token", "doc"
-    ).write.mode("append").parquet(_bm_postings_path(store_path))
+    ).sortWithinPartitions("token", "doc").write.mode("append").parquet(
+        _bm_postings_path(store_path)
+    )
 
-    up_stats = (
-        ups.join(dl_rows, "doc", "left")
-        .select(
-            "doc",
-            F.coalesce(F.col("dl"), F.lit(0)).alias("dl"),
-            F.col("__sig").alias("sig"),
-            F.lit(g).cast("long").alias("gen"),
-            # an upsert that tokenizes to NOTHING (null text) must
-            # still supersede the old generation — as a tombstone, so
-            # corpus stats keep counting only token-bearing docs (the
-            # bm25_search / rebuild-equivalence contract)
-            F.col("dl").isNull().alias("deleted"),
-            *[F.col(c) for c in fields],
-        )
+    # dl is the doc's token count, read off the same analysis as its
+    # postings.  An upsert with NULL text (the one input that
+    # tokenizes to nothing) must still supersede the old generation —
+    # as a tombstone, so corpus stats keep counting only token-bearing
+    # docs (the bm25_search / rebuild-equivalence contract)
+    null_text = F.col("__t").isNull()
+    up_stats = ups.select(
+        "doc",
+        F.when(null_text, F.lit(0)).otherwise(F.size(tokens))
+        .cast("long").alias("dl"),
+        F.col("__sig").alias("sig"),
+        F.lit(g).cast("long").alias("gen"),
+        null_text.alias("deleted"),
+        *[F.col(c) for c in fields],
     )
     up_types = dict(up_stats.dtypes)
     del_stats = applied.filter(F.col("__op") == "d").select(
@@ -1461,26 +1454,27 @@ def repair_bm25_tokenstats(spark, store_path: str) -> dict:
         return {"mode": "none", "added_docs": 0}
     if "deleted" in ds.columns:
         ds = ds.filter(~F.col("deleted"))
-    ts = read_parquet_if_exists(spark, _bm_tokenstats_path(store_path))
+    # explicit schema: a rollup begun before the doc rows existed mixes
+    # (token, df) files with (token, df, doc) deltas, and an inferred
+    # schema taken from a legacy footer would hide every doc row
+    doc_type = dict(ds.dtypes)["doc"]
+    ts = read_parquet_if_exists(
+        spark,
+        _bm_tokenstats_path(store_path),
+        schema=f"token string, df long, doc {doc_type}",
+    )
     if ts is None:
         return full()
     # counted-doc rows live inside the rollup (token NULL, df NULL,
     # doc set — see _bm_append_tokenstats); a legacy standalone
     # sidecar (written before the merge, disjoint by construction)
     # unions in when present
-    docs = (
-        ts.filter(F.col("doc").isNotNull()).select("doc")
-        if "doc" in ts.columns
-        else None
-    )
+    docs = ts.filter(F.col("doc").isNotNull()).select("doc")
     legacy = read_parquet_if_exists(
         spark, _bm_tokenstats_docs_path(store_path)
     )
     if legacy is not None:
-        legacy = legacy.select("doc")
-        docs = legacy if docs is None else docs.unionByName(legacy)
-    if docs is None:
-        return full()
+        docs = docs.unionByName(legacy.select("doc"))
     marker = (
         ts.filter(F.col("token").isNull()).agg(F.sum("df")).head()[0]
     )
@@ -4406,7 +4400,7 @@ def describe_bm25_store(spark, store_path: str, full: bool = True) -> dict:
 def compact_bm25_store(
     spark,
     store_path: str,
-    target_bytes: int = 128 << 20,
+    target_bytes: int = _BM_FILE_BYTES,
     min_files: int | None = None,
 ) -> dict:
     """Vacuum/OPTIMIZE pass for the incremental BM25 index: rewrite

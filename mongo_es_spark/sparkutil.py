@@ -24,6 +24,7 @@ end), and the count comes back for free.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame
 
 __all__ = ["sever_count"]
@@ -32,15 +33,20 @@ __all__ = ["sever_count"]
 def sever_count(df: DataFrame) -> tuple[DataFrame, int]:
     """Local-checkpoint ``df`` and return ``(severed_df, row_count)``
     in ONE Spark job (vs three for eager-checkpoint + DataFrame
-    count).  Falls back to the public two-job path if the internal
-    RDD handle is unavailable (e.g. Spark Connect)."""
+    count).  Falls back to the public two-job path only when the
+    internal RDD handle is unavailable (Spark Connect has no ``_jdf``;
+    a JVM without the method raises a plain ``Py4JError``).  Errors
+    from planning or running the plan propagate: retrying them on the
+    fallback would re-run the whole upstream just to fail again."""
     out = df.localCheckpoint(eager=False)
     try:
-        # JVM-side count over the checkpoint-marked internal RDD:
-        # single stage, no Python row traffic, materializes the
-        # checkpoint as a side effect.
-        n = out._jdf.queryExecution().toRdd().count()
-    except Exception:
+        rdd = out._jdf.queryExecution().toRdd()
+    except Py4JJavaError:
+        raise
+    except (AttributeError, Py4JError):
         out = df.localCheckpoint(eager=True)
-        n = out.count()
-    return out, int(n)
+        return out, int(out.count())
+    # JVM-side count over the checkpoint-marked internal RDD: single
+    # stage, no Python row traffic, materializes the checkpoint as a
+    # side effect
+    return out, int(rdd.count())

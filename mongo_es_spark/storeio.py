@@ -71,15 +71,18 @@ def _schema_sentinel(path: str):
 
 
 def read_parquet_if_exists(
-    spark: SparkSession, path: str
+    spark: SparkSession, path: str, schema: Optional[str] = None
 ) -> Optional[DataFrame]:
     """``spark.read.parquet(path)``, or ``None`` when the path does
     not exist or holds no data files yet (e.g. only ``_``-prefixed
     sidecars from a partially-completed first write).  Repeat reads of
     an unchanged-layout store reuse the first read's schema (see
-    ``_SCHEMA_CACHE``), skipping the per-open schema-inference job."""
-    key = _schema_cache_key(path)
-    cached = None
+    ``_SCHEMA_CACHE``), skipping the per-open schema-inference job.
+    An explicit ``schema`` replaces inference for stores whose files
+    span layouts: columns an older file lacks read as NULL, where an
+    inferred schema would come from one arbitrary footer."""
+    key = _schema_cache_key(path) if schema is None else None
+    cached = schema
     if key is not None:
         ent = _SCHEMA_CACHE.get(key)
         if ent is not None:

@@ -8,7 +8,9 @@ a declarative per-batch DataFrame plan:
       -> relevance filter (F4, ignoreUpdate)
       -> LEFT JOIN sink state by id   (J1/J2 — replaces the mget/terms
                                        promise batcher wholesale)
-      -> LEFT JOIN source by id       (J3 — the Mongo $in fallback)
+      -> LEFT JOIN source by id       (J3 — the Mongo $in fallback;
+                                       both joins are skipped for a
+                                       patch-free batch)
       -> dispatch select (i / full-replace-u / patch-u / d branches as
          CASE expressions over the joined row)
       -> IR frame -> sink.apply (L1) -> checkpoint hook (C3)
@@ -30,7 +32,7 @@ from __future__ import annotations
 import time
 from typing import Mapping, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import CheckPoint, Controls, Task
@@ -235,31 +237,27 @@ def run_tail(
         batch_df = throttle(batch_df, controls.mongodb_read_capacity)
         compacted = compact_oplog_docs(batch_df, task)
         state = None
-        need_state = hasattr(sink, "read_state")
-        if need_state and not task.transform.parent:
+        has_patch = True
+        if hasattr(sink, "read_state") and not task.transform.parent:
             # Only patch-updates (and parent-routed deletes, excluded
-            # above) ever CONSULT sink state in dispatch_ir_frame —
-            # inserts, full-replace updates and parentless deletes
-            # produce identical IR with state=None (patched/__sink_*
-            # branches are unreachable, and the delete keep-rule is
-            # `true | in_sink`).  One batch-sized probe decides, so an
-            # insert-only / full-replace tail never scans the sink's
-            # merge log (or issues _mget calls) at all — per-trigger
-            # state cost ∝ 0 instead of ∝ log size on the dominant
-            # CDC shape.  The checkpoint makes the probe, the lookup's
-            # id broadcast and the dispatch pass share ONE
-            # materialization of the compaction fold (it previously
-            # re-ran lazily per consumer).
-            compacted = compacted.localCheckpoint(eager=True)
-            has_patch = compacted.agg(
+            # above) ever CONSULT sink state or the source (J3) in
+            # dispatch_ir_frame: every __sink_*/__src_* branch sits
+            # under is_patch and the delete keep-rule is
+            # `true | in_sink`.  So a patch-free batch neither scans
+            # the sink's merge log (or issues _mget calls) nor re-reads
+            # the source.  The flag is observed on the compaction
+            # checkpoint that the lookup and dispatch share anyway
+            # (no job of its own); a fresh Observation at the top of
+            # the checkpointed plan reports exactly that one run.
+            probe = Observation()
+            compacted = compacted.observe(
+                probe,
                 F.max(
-                    (
-                        (F.col("op") == "u") & ~F.col("has_plain")
-                    ).cast("int")
-                )
-            ).head()[0]
-            need_state = bool(has_patch)
-        if need_state:
+                    ((F.col("op") == "u") & ~F.col("has_plain")).cast("int")
+                ).alias("has_patch"),
+            ).localCheckpoint(eager=True)
+            has_patch = bool(probe.get["has_patch"])
+        if has_patch and hasattr(sink, "read_state"):
             # J1/J2: the batch's distinct keys drive the lookup —
             # ParquetIndexSink ignores them (whole-state join),
             # EsBulkSink turns them into executor-side _mget/terms
@@ -278,7 +276,9 @@ def run_tail(
                         "data_json", sink_data_schema(task, hints)
                     ).alias("data"),
                 )
-        irs = dispatch_ir_frame(compacted, task, state, source_df, hints)
+        irs = dispatch_ir_frame(
+            compacted, task, state, source_df if has_patch else None, hints
+        )
         sink.apply(spark, irs, batch_id)
         Task.save_checkpoint(
             task.name(),

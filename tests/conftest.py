@@ -73,7 +73,10 @@ def pytest_runtest_logreport(report):
 def pytest_sessionfinish(session, exitstatus):
     if os.environ.get("_SPARK_GRAFT_TEST_SHARD") is None:
         return
-    if not _SHARD_DURATIONS:
+    # only a clean shard's durations are real costs: a shard whose JVM
+    # died mid-run records near-zero seconds for every later file, and
+    # the newest record wins at the next balance
+    if exitstatus != 0 or not _SHARD_DURATIONS:
         return
     try:
         with open(_COSTS_PATH, "a") as fh:

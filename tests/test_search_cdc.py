@@ -308,6 +308,102 @@ def test_fold_guard_raises_on_changed_content(spark, tmp_path):
         )
 
 
+def _file_state(store):
+    """path -> (size, mtime) of every file: a rewrite in place shows"""
+    out = {}
+    for dp, _, fs in os.walk(store):
+        for f in fs:
+            st = os.stat(os.path.join(dp, f))
+            out[os.path.join(dp, f)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_fold_counters_see_replays_and_duplicates(spark, tmp_path):
+    """The fold reads its counters from observed metrics on the probe
+    checkpoint.  A batch that is a replay in every row (upsert of
+    unchanged content, delete of a deleted doc, null-text upsert of a
+    tombstoned doc) writes nothing, leaves ``_bm_params`` as it was and
+    returns empty; a duplicated id raises even when every copy is a
+    replay, before anything is written."""
+    from mongo_es_spark.operators.text import apply_cdc_to_bm25_index
+
+    store = _build(spark, tmp_path, "obs", DOCS)
+    first = CDC + [(8, "u", None, None)]  # 8: new doc, tombstone only
+    apply_cdc_to_bm25_index(
+        spark,
+        spark.createDataFrame(first, CDC_SCHEMA),
+        store,
+        field_cols=["lang"],
+    ).count()
+    params = sorted(
+        map(tuple, spark.read.parquet(f"{store}/_bm_params").collect())
+    )
+    before = _file_state(store)
+
+    replay = [
+        (2, "u", "updated spark tables", "en"),
+        (3, "d", None, None),
+        (8, "u", None, None),
+        (6, "u", "values values tables", "en"),
+    ]
+    out = apply_cdc_to_bm25_index(
+        spark,
+        spark.createDataFrame(replay, CDC_SCHEMA),
+        store,
+        field_cols=["lang"],
+    )
+    assert out.columns == ["doc", "op", "gen"] and out.count() == 0
+    assert _file_state(store) == before
+    assert sorted(
+        map(tuple, spark.read.parquet(f"{store}/_bm_params").collect())
+    ) == params
+
+    dup = [(2, "u", "updated spark tables", "en")] * 2
+    with pytest.raises(ValueError, match=r"duplicate doc ids \[2\]"):
+        apply_cdc_to_bm25_index(
+            spark,
+            spark.createDataFrame(dup, CDC_SCHEMA),
+            store,
+            field_cols=["lang"],
+        )
+    assert _file_state(store) == before
+
+
+def test_fold_seq_col_last_writer_wins(spark, tmp_path):
+    """With ``seq_col`` the batch may carry several rows per doc: the
+    fold keeps each doc's highest-seq row and must equal the unordered
+    fold of that compacted batch."""
+    from mongo_es_spark.operators.text import apply_cdc_to_bm25_index
+
+    store = _build(spark, tmp_path, "seq", DOCS)
+    ref = _build(spark, tmp_path, "seqref", DOCS)
+    rows = [
+        (2, "u", "stale text", "en", 1),
+        (2, "u", "updated spark tables", "en", 3),
+        (3, "u", "tables revived", "fr", 1),
+        (3, "d", None, None, 2),
+        (5, "u", "rows rows updated", "de", 5),
+        (7, "i", "fresh spark doc", "de", 4),
+    ]
+    applied = apply_cdc_to_bm25_index(
+        spark,
+        spark.createDataFrame(rows, CDC_SCHEMA + ", seq long"),
+        store,
+        field_cols=["lang"],
+        seq_col="seq",
+    )
+    assert sorted((r["doc"], r["op"]) for r in applied.collect()) == [
+        (2, "u"), (3, "d"), (5, "u"), (7, "i")
+    ]
+    apply_cdc_to_bm25_index(
+        spark,
+        spark.createDataFrame(CDC, CDC_SCHEMA),
+        ref,
+        field_cols=["lang"],
+    ).count()
+    assert _all_queries(spark, store) == _all_queries(spark, ref)
+
+
 def _snapshot(store):
     return {
         os.path.join(dp, f)
@@ -359,6 +455,36 @@ def test_cdc_crash_points_converge(spark, tmp_path):
         ).count() == 0
 
 
+def _write_feed(tmp_path, ns, batches):
+    """One oplog file per batch (one micro-batch each under
+    maxFilesPerTrigger=1), with strictly increasing mtimes."""
+    from mongo_es_spark.core import make_ts
+
+    oplog_dir = tmp_path / "oplog"
+    oplog_dir.mkdir()
+    base = 1_700_000_000
+    seq = 0
+    for i, batch in enumerate(batches):
+        fname = oplog_dir / f"b{i}.json"
+        with open(fname, "w") as fh:
+            for ev in batch:
+                seq += 1
+                fh.write(
+                    json.dumps(
+                        {
+                            "ts": make_ts(seq),
+                            "ns": ns,
+                            "op": ev["op"],
+                            "id": ev["id"],
+                            "doc": json.dumps(ev["doc"]),
+                        }
+                    )
+                    + "\n"
+                )
+        os.utime(fname, (base + i * 60, base + i * 60))
+    return oplog_dir
+
+
 def test_tail_pipeline_maintains_search_index(spark, tmp_path):
     """The judge's done-criterion: drive insert -> update -> delete
     through the ACTUAL tail pipeline (run_tail -> sink -> index
@@ -408,30 +534,7 @@ def test_tail_pipeline_maintains_search_index(spark, tmp_path):
              "doc": {"body": "updated spark tables", "lang": "en"}},
         ],
     ]
-    oplog_dir = tmp_path / "oplog"
-    oplog_dir.mkdir()
-    from mongo_es_spark.core import make_ts
-
-    base = 1_700_000_000
-    seq = 0
-    for i, batch in enumerate(batches):
-        fname = oplog_dir / f"b{i}.json"
-        with open(fname, "w") as fh:
-            for ev in batch:
-                seq += 1
-                fh.write(
-                    json.dumps(
-                        {
-                            "ts": make_ts(seq),
-                            "ns": "lib.docs",
-                            "op": ev["op"],
-                            "id": ev["id"],
-                            "doc": json.dumps(ev["doc"]),
-                        }
-                    )
-                    + "\n"
-                )
-        os.utime(fname, (base + i * 60, base + i * 60))
+    oplog_dir = _write_feed(tmp_path, "lib.docs", batches)
 
     store = str(tmp_path / "search")
     sink = SearchIndexedSink(
@@ -501,6 +604,163 @@ def test_tail_pipeline_maintains_search_index(spark, tmp_path):
         for r in facets_over_store(spark, ref, ["spark"], "lang").collect()
     )
     assert gf == wf
+
+
+def test_search_tail_jobs_per_trigger(spark, tmp_path, monkeypatch):
+    """Job-count guard for a search-indexed tail, counted on the Spark
+    driver's DAG-scheduler job counter (counts are deterministic, so a
+    change that adds a job back fails here).  A patch-free trigger must
+    read neither the sink's merge log nor the source collection: its
+    has-patch flag is an observed metric on the compaction checkpoint.
+    A trigger with a patch still runs the sink lookup and J3, the
+    source fallback for a patched doc the sink no longer holds."""
+    from mongo_es_spark.config import Controls, Task
+    from mongo_es_spark.operators import text
+    from mongo_es_spark.sources.cdc import file_oplog_stream
+    from mongo_es_spark.streaming import tail
+    from mongo_es_spark.streaming.sink import (
+        ParquetIndexSink,
+        SearchIndexedSink,
+    )
+
+    task = Task(
+        {
+            "from": {"phase": "scan"},
+            "extract": {"db": "lib", "collection": "docs"},
+            "transform": {"mapping": {"body": "body", "lang": "lang"}},
+            "load": {"index": "docs", "type": "doc"},
+        }
+    )
+    hints = {"body": "string", "lang": "string"}
+    src_path = str(tmp_path / "source_docs")
+    spark.createDataFrame(
+        [
+            ("D1", "spark streams tables", "en"),
+            ("D2", "spark spark batch", "en"),
+            ("D3", "tables and rows", "fr"),
+            ("D4", "stream of values", "en"),
+        ],
+        "_id string, body string, lang string",
+    ).write.parquet(src_path)
+    source = spark.read.parquet(src_path)
+    batches = [
+        [  # patch-free: insert, full replace, delete
+            {"op": "i", "id": "D5",
+             "doc": {"body": "fresh spark doc", "lang": "de"}},
+            {"op": "u", "id": "D2",
+             "doc": {"body": "updated spark tables", "lang": "en"}},
+            {"op": "d", "id": "D3", "doc": {}},
+        ],
+        [  # patches: D1 from the sink, D3 (deleted) from the source
+            {"op": "u", "id": "D1", "doc": {"$set": {"lang": "de"}}},
+            {"op": "u", "id": "D3", "doc": {"$set": {"lang": "es"}}},
+        ],
+        [  # patch-free again
+            {"op": "i", "id": "D6",
+             "doc": {"body": "values values tables", "lang": "en"}},
+        ],
+    ]
+    oplog_dir = _write_feed(tmp_path, "lib.docs", batches)
+
+    def jobs() -> int:
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    triggers: list[dict] = []
+
+    class CountingSink(ParquetIndexSink):
+        def read_state(self, spark, ids=None):
+            triggers[-1]["state_reads"] += 1
+            return super().read_state(spark, ids=ids)
+
+    store = str(tmp_path / "search")
+    sink = SearchIndexedSink(
+        CountingSink(str(tmp_path / "sink"), mode="merge"),
+        store,
+        text_field="body",
+        field_cols=("lang",),
+    )
+    tail.run_scan(spark, task, source, sink)
+
+    compact, dispatch = tail.compact_oplog_docs, tail.dispatch_ir_frame
+    fold, save = text.apply_cdc_to_bm25_index, Task.save_checkpoint
+
+    def counted_compact(batch_df, task_):
+        triggers.append({"start": jobs(), "state_reads": 0})
+        return compact(batch_df, task_)
+
+    def counted_dispatch(compacted, task_, state, source_df=None, hints=None):
+        triggers[-1]["lookup"] = state is not None
+        triggers[-1]["j3"] = source_df is not None
+        return dispatch(compacted, task_, state, source_df, hints)
+
+    def counted_fold(*a, **k):
+        j0 = jobs()
+        out = fold(*a, **k)
+        triggers[-1]["fold"] = jobs() - j0
+        return out
+
+    def counted_save(name, ckpt):
+        triggers[-1]["jobs"] = jobs() - triggers[-1]["start"]
+        return save(name, ckpt)
+
+    monkeypatch.setattr(tail, "compact_oplog_docs", counted_compact)
+    monkeypatch.setattr(tail, "dispatch_ir_frame", counted_dispatch)
+    monkeypatch.setattr(text, "apply_cdc_to_bm25_index", counted_fold)
+    monkeypatch.setattr(Task, "save_checkpoint", counted_save)
+    q = tail.run_tail(
+        spark,
+        task,
+        Controls(),
+        file_oplog_stream(
+            spark, str(oplog_dir), task, max_files_per_trigger=1
+        ),
+        sink,
+        source_df=source,
+        hints=hints,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        available_now=True,
+    )
+    drain(q)
+
+    assert len(triggers) == 3
+    first, patched, last = triggers
+    for t in (first, last):
+        assert t["state_reads"] == 0 and not t["lookup"] and not t["j3"]
+    assert patched["state_reads"] == 1 and patched["lookup"]
+    assert patched["j3"]
+    # patch-free: compaction checkpoint 2, IR checkpoint 1, doc-sink
+    # append 1, fold 6 (probe 3, postings 2, docstats 1); the first
+    # fold after the scan also infers the new stores' schemas (2)
+    assert first["fold"] <= 8 and first["jobs"] <= 12, first
+    assert last["fold"] <= 6 and last["jobs"] <= 10, last
+    # + the sink lookup and the J3 source join
+    assert patched["fold"] <= 6 and patched["jobs"] <= 16, patched
+
+    state = {
+        r["_id"]: (r["data"]["body"], r["data"]["lang"])
+        for r in sink.read_state(spark).collect()
+    }
+    assert state == {
+        "D1": ("spark streams tables", "de"),
+        "D2": ("updated spark tables", "en"),
+        # J3: gone from the sink, re-read from the source collection
+        "D3": ("tables and rows", "fr"),
+        "D4": ("stream of values", "en"),
+        "D5": ("fresh spark doc", "de"),
+        "D6": ("values values tables", "en"),
+    }
+    ref = str(tmp_path / "ref")
+    text.incremental_bm25_index(
+        spark,
+        spark.createDataFrame(
+            [(k, body, lang) for k, (body, lang) in state.items()],
+            "doc_id string, text string, lang string",
+        ),
+        ref,
+        field_cols=["lang"],
+    ).count()
+    terms = ["spark", "tables", "values", "streams"]
+    assert _q_bm25(spark, store, terms) == _q_bm25(spark, ref, terms)
 
 
 def test_all_serving_ops_live_resolve_after_cdc(spark, tmp_path):

@@ -364,3 +364,80 @@ def test_desync_repair_crash_point_matrix(spark, tmp_path):
     # the rebuild refreshed the doc rows in place: counted == live == 8
     merged = spark.read.parquet(ts)
     assert merged.filter("doc is not null").count() == 8
+
+
+def test_legacy_rollup_repairs_incrementally(spark, tmp_path):
+    """A rollup begun before the counted-doc rows existed holds
+    ``(token, df)``-only files beside a standalone ``tokenstats_docs``
+    sidecar; later folds append ``(token, df, doc)`` deltas.  Read with
+    the legacy footer's schema, the rollup hides every appended doc
+    row, the counted-docs check fails, and a one-fold gap costs a
+    postings-wide rebuild.  The repair must see both layouts and take
+    the incremental path."""
+    from mongo_es_spark.operators.text import repair_bm25_tokenstats
+    from mongo_es_spark.storeio import read_parquet_if_exists
+
+    store = str(tmp_path / "bm25")
+    ts = os.path.join(store, "tokenstats")
+    td = os.path.join(store, "tokenstats_docs")
+    _fold(spark, store, DOCS[:3])
+    # rewrite the rollup in the legacy layout: df rows + doc-count
+    # marker only, the counted doc ids in the standalone sidecar
+    rollup = spark.read.parquet(ts)
+    legacy = rollup.filter("doc is null").select("token", "df").collect()
+    shutil.rmtree(ts)
+    spark.createDataFrame(legacy, "token string, df long").coalesce(
+        1
+    ).write.parquet(ts)
+    spark.createDataFrame([(1,), (2,), (3,)], "doc long").write.parquet(td)
+    # a reader opened on the legacy layout pins its schema
+    assert read_parquet_if_exists(spark, ts).columns == ["token", "df"]
+
+    _fold(spark, store, DOCS[3:5])  # new-format delta: docs 4, 5
+    b_ts = set(os.listdir(ts))
+    _fold(spark, store, DOCS[5:])  # doc 6: crash before its delta
+    for f in set(os.listdir(ts)) - b_ts:
+        os.remove(os.path.join(ts, f))
+
+    out = repair_bm25_tokenstats(spark, store)
+    assert out == {"mode": "incremental", "added_docs": 1}
+    clean = str(tmp_path / "clean")
+    _fold(spark, clean, DOCS)
+    assert sorted(map(tuple, _sig(spark, store).collect())) == sorted(
+        map(tuple, _sig(spark, clean).collect())
+    )
+
+
+def test_dead_counter_exact_across_delete_reinsert_cycles(spark, tmp_path):
+    """The params ``dead`` counter comes from the fold's observed probe
+    metrics: each delete adds its superseded live row plus its own
+    tombstone, each reinsert adds nothing (the tombstone it supersedes
+    was counted when written).  Pinned against the window-computed
+    truth over two full delete → reinsert → delete cycles."""
+    from mongo_es_spark.operators.text import (
+        apply_cdc_to_bm25_index,
+        describe_bm25_store,
+    )
+
+    store = str(tmp_path / "bm25")
+    _fold(spark, store, DOCS)
+
+    def apply(rows):
+        apply_cdc_to_bm25_index(
+            spark,
+            spark.createDataFrame(rows, CDC_SCHEMA),
+            store,
+            field_cols=["lang"],
+        ).count()
+        cheap = describe_bm25_store(spark, store, full=False)
+        exact = describe_bm25_store(spark, store, full=True)
+        assert cheap["dead_rows"] == exact["dead_rows"], (cheap, exact)
+        assert cheap["live_docs"] == exact["live_docs"]
+        return cheap["dead_rows"]
+
+    assert apply([(4, "d", None, None)]) == 2
+    assert apply([(4, "u", "stream of values", "en")]) == 2
+    assert apply([(4, "d", None, None)]) == 4
+    assert apply([(4, "d", None, None)]) == 4  # replayed delete
+    assert apply([(4, "u", "stream reborn", "fr")]) == 4
+    assert apply([(4, "d", None, None), (5, "d", None, None)]) == 8
